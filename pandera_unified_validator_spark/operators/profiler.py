@@ -1,12 +1,15 @@
 """Distributed data profiler — SURVEY.md §2.5 (A1-A15) re-expressed as Spark.
 
 The reference computes each statistic as a separate pandas pass per column
-(``profiling/profiler.py:257-293``); here every scalar statistic for every
-column folds into ONE ``df.agg(...)`` job (map-side partial aggregation, one
-tiny shuffle), quantiles use Spark's Greenwald-Khanna sketch
-(``approxQuantile`` — the GK requirement of the north star), distinct counts
-use HLL++ (``approx_count_distinct``), and histograms for ALL numeric columns
-compute in one additional job via unpivot → bucket → groupBy.
+(``profiling/profiler.py:257-293``); here a profile is two ``df.agg(...)``
+passes over the input, whatever the column count. The first folds every
+scalar statistic of every column: moments, min/max, distinct counts (HLL++,
+``approx_count_distinct``), the Greenwald-Khanna quartile sketch
+(``approx_percentile``, the GK requirement of the north star), the
+duplicate-row hash and the correlations. The second needs the first's
+results: histogram bins over its min/max, categorical values of the strings
+its distinct counts put under the threshold, and the IQR-outlier share
+behind the quality score.
 
 Exactness policy (SURVEY.md §7.4.4): the reference's quantiles/nunique are
 exact; ours are sketch-approximate by default. ``exact=True`` switches to
@@ -18,9 +21,9 @@ from __future__ import annotations
 import datetime as _dt
 import math
 from dataclasses import dataclass, field
-from typing import Any, Mapping, Sequence
+from typing import Any, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -28,6 +31,8 @@ __all__ = ["ColumnProfile", "ProfileReport", "DataProfiler"]
 
 _NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.FloatType,
             T.DoubleType, T.DecimalType)
+
+_INT_MAX = 2**31 - 1
 
 # candidate regexes for pattern inference (reference profiling/profiler.py:324-336)
 _PATTERNS = (r"^\d+$", r"^[A-Za-z0-9_-]+$", r"^[A-Za-z\s]+$")
@@ -130,6 +135,22 @@ def numeric_summary(df: DataFrame, column: str, exact: bool = True, round_to: in
     )
 
 
+def _has_map(t: T.DataType) -> bool:
+    if isinstance(t, T.MapType):
+        return True
+    if isinstance(t, T.ArrayType):
+        return _has_map(t.elementType)
+    if isinstance(t, T.StructType):
+        return any(_has_map(f.dataType) for f in t.fields)
+    return False
+
+
+def _hashable(c: str, t: T.DataType) -> Column:
+    """Column ``c`` as an ``xxhash64`` argument: itself, or its string form
+    when the type holds a map, which ``xxhash64`` rejects."""
+    return F.col(c).cast("string") if _has_map(t) else F.col(c)
+
+
 def _dtype_label(t: T.DataType) -> str:
     if isinstance(t, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
         return "int"
@@ -149,13 +170,13 @@ def _dtype_label(t: T.DataType) -> str:
 
 
 class DataProfiler:
-    """One-pass profiling over arbitrary DataFrames.
+    """Two-pass profiling over arbitrary DataFrames.
 
-    Job count is independent of column count: 1 agg job (all scalar stats,
-    all columns) + 1 approxQuantile job (all numeric columns at once) +
-    1 histogram job (all numeric columns via unpivot) + 1 optional
-    categorical-values job. The reference ran O(columns × stats) pandas
-    passes (profiling/profiler.py:257-293).
+    Pass count is independent of column count: one aggregate for every
+    scalar statistic and quartile sketch of every column, and one for the
+    histograms, categorical values and IQR fences that depend on its
+    results (skipped when nothing needs it). The reference ran
+    O(columns × stats) pandas passes (profiling/profiler.py:257-293).
     """
 
     SUPPORTED_BACKENDS = {"built-in", "pandas-profiling", "ydata-profiling", "sweetviz"}
@@ -229,19 +250,17 @@ class DataProfiler:
         ]
 
         arrays = [c for c in cols if isinstance(fields[c], T.ArrayType)]
+        distinct = F.countDistinct if self.exact else F.approx_count_distinct
 
+        # pass 1: every scalar statistic of every column, quartile sketches
+        # included
         aggs: list = [F.count(F.lit(1)).alias("__n")]
         for c in cols:
             aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"miss__{c}"))  # A6
-            if c in arrays:
-                # arrays aren't directly distinct-countable cheaply: hash them
-                h = F.xxhash64(F.col(c).cast("string"))
-                agg_fn = F.countDistinct if self.exact else F.approx_count_distinct
-                aggs.append(agg_fn(h).alias(f"dist__{c}"))
-            elif self.exact:
-                aggs.append(F.countDistinct(c).alias(f"dist__{c}"))                 # A10
-            else:
-                aggs.append(F.approx_count_distinct(c).alias(f"dist__{c}"))
+            # A10; arrays count a 64-bit hash of the value, which keeps the
+            # distinct narrow
+            v = F.xxhash64(_hashable(c, fields[c])) if c in arrays else F.col(c)
+            aggs.append(distinct(v).alias(f"dist__{c}"))
         for c in arrays:
             # array-aware stats (token table: size ≈ n_tok, element = token id)
             sz = F.size(F.col(c))
@@ -259,6 +278,7 @@ class DataProfiler:
                 F.stddev_pop(c).alias(f"std__{c}"),       # A3 (ddof=0 like reference)
                 F.min(c).alias(f"min__{c}"),              # A4
                 F.max(c).alias(f"max__{c}"),
+                self._quartiles(c).alias(f"q__{c}"),      # A2/A5
             ]
         for c in temporal:
             aggs += [F.min(c).alias(f"min__{c}"), F.max(c).alias(f"max__{c}")]
@@ -273,12 +293,11 @@ class DataProfiler:
                 )
         # A11 duplicate rows: count - distinct over a 64-bit row hash (hashing
         # first keeps the distinct narrow at 100 TB; reference drops dupes in
-        # pandas, profiling/profiler.py:187)
-        row_hash = F.xxhash64(*[F.coalesce(F.col(c).cast("string"), F.lit("\0")) for c in cols])
-        if self.exact:
-            aggs.append(F.countDistinct(row_hash).alias("__distinct_rows"))
-        else:
-            aggs.append(F.approx_count_distinct(row_hash).alias("__distinct_rows"))
+        # pandas, profiling/profiler.py:187). xxhash64 skips NULL arguments,
+        # so each column carries an isnull marker: without it (NULL, 'a') and
+        # ('a', NULL) hash alike.
+        row_hash = F.xxhash64(*[e for c in cols for e in (_hashable(c, fields[c]), F.isnull(c))])
+        aggs.append(distinct(row_hash).alias("__distinct_rows"))
         # A12 pairwise correlations in the same pass
         corr_cols = numeric[: self.max_corr_columns] if self.correlations else []
         for i, a in enumerate(corr_cols):
@@ -287,20 +306,6 @@ class DataProfiler:
 
         row = df.agg(*aggs).collect()[0].asDict()
         n = row["__n"]
-
-        # A2/A5 quantiles: one GK-sketch job for every numeric column at once
-        quantiles: dict[str, list[float]] = {}
-        if numeric and n:
-            if self.exact:
-                qaggs = [
-                    F.expr(f"percentile(`{c}`, array(0.25, 0.5, 0.75))").alias(c)
-                    for c in numeric
-                ]
-                qrow = df.agg(*qaggs).collect()[0].asDict()
-                quantiles = {c: list(qrow[c]) if qrow[c] else [None] * 3 for c in numeric}
-            else:
-                qs = df.approxQuantile(numeric, [0.25, 0.5, 0.75], self.quantile_error)
-                quantiles = dict(zip(numeric, qs))
 
         profiles: dict[str, ColumnProfile] = {}
         for c in cols:
@@ -320,9 +325,9 @@ class DataProfiler:
                 p.std = row.get(f"std__{c}")
                 p.min = row.get(f"min__{c}")
                 p.max = row.get(f"max__{c}")
-                q = quantiles.get(c)
+                q = row.get(f"q__{c}")
                 if q and q[0] is not None:
-                    p.q1, p.median, p.q3 = q
+                    p.q1, p.median, p.q3 = (float(v) for v in q)
             elif c in temporal:
                 p.min = row.get(f"min__{c}")
                 p.max = row.get(f"max__{c}")
@@ -343,16 +348,16 @@ class DataProfiler:
                         break
             profiles[c] = p
 
-        # A7 histograms: ALL numeric columns in one job — unpivot to
-        # (col, value), bucket with the min/max already computed, group once.
-        if numeric and n:
-            bounded = [
-                c for c in numeric
-                if profiles[c].min is not None and profiles[c].max is not None
-            ]
-            exprs = []
-            for c in bounded:
-                lo, hi = float(profiles[c].min), float(profiles[c].max)
+        # pass 2: what needs pass 1's results — histograms over its min/max,
+        # categorical values under its distinct counts, IQR fences from its
+        # quartiles
+        aggs = []
+        edges: dict[str, tuple[float, float]] = {}
+        for c in numeric:
+            p = profiles[c]
+            if p.min is not None and p.max is not None:
+                # A7: one count per bin (a NULL value matches no bin)
+                lo, hi = float(p.min), float(p.max)
                 # guard the COMPUTED width, not hi > lo: a subnormal span
                 # (hi - lo = 5e-324) underflows to 0.0 when divided by the
                 # bin count, and ANSI mode turns that into a job-killing
@@ -360,45 +365,38 @@ class DataProfiler:
                 width = (hi - lo) / self.histogram_bins
                 if not width > 0.0:
                     width = 1.0
+                edges[c] = (lo, width)
                 bucket = F.least(
                     F.floor((F.col(c).cast("double") - F.lit(lo)) / F.lit(width)),
                     F.lit(self.histogram_bins - 1),
                 ).cast("int")
-                exprs.append(
-                    F.when(F.col(c).isNotNull(), F.struct(F.lit(c).alias("col"), bucket.alias("bucket")))
+                aggs += [
+                    F.count_if(bucket == i).alias(f"h{i}__{c}") for i in range(self.histogram_bins)
+                ]
+            if p.q1 is not None and p.q3 is not None and p.q3 > p.q1:
+                # A13 validity: share of values outside the 1.5·IQR fences
+                iqr = p.q3 - p.q1
+                lo, hi = p.q1 - 1.5 * iqr, p.q3 + 1.5 * iqr
+                aggs.append(
+                    F.mean(((F.col(c) < lo) | (F.col(c) > hi)).cast("double")).alias(f"out__{c}")
                 )
-            if exprs:
-                hist = (
-                    df.select(F.explode(F.array_compact(F.array(*exprs))).alias("cb"))
-                    .groupBy("cb.col", "cb.bucket")
-                    .count()
-                    .collect()
-                )
-                by_col: dict[str, dict[int, int]] = {}
-                for r in hist:
-                    by_col.setdefault(r["col"], {})[r["bucket"]] = r["count"]
-                for c in bounded:
-                    lo, hi = float(profiles[c].min), float(profiles[c].max)
-                    width = (hi - lo) / self.histogram_bins
-                    if not width > 0.0:  # subnormal span underflows to 0
-                        width = 1.0
-                    counts = by_col.get(c, {})
-                    profiles[c].histogram = [
-                        (lo + i * width, lo + (i + 1) * width, counts.get(i, 0))
-                        for i in range(self.histogram_bins)
-                    ]
-
-        # A8 categorical values: one collect for all low-cardinality strings
+        # A8 categorical values of the low-cardinality strings
         cat_cols = [
             c for c in strings
             if profiles[c].n_distinct and 0 < profiles[c].n_distinct <= self.categorical_threshold
         ]
-        if cat_cols:
-            crow = df.agg(
-                *[F.sort_array(F.collect_set(c)).alias(c) for c in cat_cols]
-            ).collect()[0]
-            for c in cat_cols:
-                profiles[c].categorical_values = list(crow[c])
+        aggs += [F.sort_array(F.collect_set(c)).alias(f"cat__{c}") for c in cat_cols]
+        row2 = df.agg(*aggs).collect()[0].asDict() if aggs else {}
+        for c, (lo, width) in edges.items():
+            profiles[c].histogram = [
+                (lo + i * width, lo + (i + 1) * width, row2[f"h{i}__{c}"])
+                for i in range(self.histogram_bins)
+            ]
+        for c in cat_cols:
+            profiles[c].categorical_values = list(row2[f"cat__{c}"])
+        outlier_ratios = [
+            v for k, v in row2.items() if k.startswith("out__") and v is not None
+        ]
 
         correlations = {
             (a, b): (row[f"corr__{a}__{b}"] if row.get(f"corr__{a}__{b}") is not None else 0.0)
@@ -416,10 +414,22 @@ class DataProfiler:
             backend=backend_used,
             raw_backend_report=raw_backend,
         )
-        report.quality = self._quality(report, numeric, df)
+        report.quality = self._quality(report, outlier_ratios)
         for p in profiles.values():
             p.suggestion = self._suggest(p)
         return report
+
+    def _quartiles(self, c: str) -> Column:
+        """[q1, median, q3] of numeric column ``c`` as an aggregate. The
+        sketch branch is ``df.approxQuantile`` as an expression: values as
+        doubles, NaN dropped (``approx_percentile`` would keep it), accuracy
+        ``ceil(1 / quantile_error)``."""
+        if self.exact:
+            return F.percentile(c, [0.25, 0.5, 0.75])
+        x = F.col(c).cast("double")
+        err = self.quantile_error
+        accuracy = min(math.ceil(1 / err), _INT_MAX) if err else _INT_MAX
+        return F.percentile_approx(F.when(~F.isnan(x), x), [0.25, 0.5, 0.75], accuracy)
 
     # A15 constraint suggestion (reference profiling/profiler.py:344-376)
     def _suggest(self, p: ColumnProfile) -> dict[str, Any]:
@@ -452,28 +462,16 @@ class DataProfiler:
         return s
 
     # A13/A14 quality score (reference profiling/profiler.py:378-446)
-    def _quality(self, rep: ProfileReport, numeric: list[str], df: DataFrame) -> dict[str, float]:
+    def _quality(self, rep: ProfileReport, outlier_ratios: list[float]) -> dict[str, float]:
+        """``outlier_ratios``: per numeric column, the share of values
+        outside its 1.5·IQR fences (computed in the profile's second pass)."""
         n = rep.n_rows or 1
         completeness = 1.0 - sum(p.n_missing for p in rep.columns.values()) / (
             n * max(len(rep.columns), 1)
         )
         uniqueness = 1.0 - rep.duplicate_rows / n
-        # validity = 1 − IQR-outlier ratio (1.5·IQR fences), one extra agg job
-        validity = 1.0
-        fences = []
-        for c in numeric:
-            p = rep.columns[c]
-            if p.q1 is not None and p.q3 is not None and p.q3 > p.q1:
-                iqr = p.q3 - p.q1
-                lo, hi = p.q1 - 1.5 * iqr, p.q3 + 1.5 * iqr
-                fences.append(
-                    F.mean(((F.col(c) < lo) | (F.col(c) > hi)).cast("double")).alias(c)
-                )
-        if fences:
-            out = df.agg(*fences).collect()[0]
-            ratios = [v for v in out if v is not None]
-            if ratios:
-                validity = 1.0 - sum(ratios) / len(ratios)
+        # validity = 1 − mean IQR-outlier ratio
+        validity = 1.0 - sum(outlier_ratios) / len(outlier_ratios) if outlier_ratios else 1.0
         consistency = 1.0  # type conformance is schema-checked upstream
         timeliness = 1.0
         tcols = [p for p in rep.columns.values() if p.dtype in ("datetime", "date") and p.max]

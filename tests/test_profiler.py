@@ -247,3 +247,97 @@ def test_histogram_survives_subnormal_span(spark):
     assert prof.columns["x"].histogram is not None
     assert sum(n for _, _, n in prof.columns["x"].histogram) == 2
     assert histogram_df(df, "x", 0.0, 5e-324, 10).count() >= 1
+
+
+# ------------------------------------------------ two-pass profile contract ----
+@pytest.fixture(scope="module")
+def quantile_frame(spark):
+    i = F.col("id")
+    return spark.range(3000, numPartitions=2).select(
+        ((i * 7919) % 1000).cast("int").alias("int"),
+        F.rand(1).alias("double"),
+        F.when(i % 5 == 0, F.lit(None)).otherwise(F.rand(2)).alias("with_nulls"),
+        F.exp(F.randn(3) * 2).alias("lognormal"),
+        F.when(i % 7 == 0, F.lit(float("nan"))).otherwise(F.rand(4)).alias("with_nan"),
+    )
+
+
+@pytest.mark.parametrize("err", [0.05, 0.01, 0.001])
+@pytest.mark.parametrize("column", ["int", "double", "with_nulls", "lognormal", "with_nan"])
+def test_folded_quartiles_equal_approx_quantile(spark, quantile_frame, column, err):
+    """The quartile sketch folded into the scalar pass returns what a
+    separate ``df.approxQuantile`` job returns, NaN-bearing columns
+    included (``approxQuantile`` drops NaN)."""
+    df = quantile_frame.select(column)
+    p = DataProfiler(quantile_error=err).profile(df).columns[column]
+    assert [p.q1, p.median, p.q3] == df.approxQuantile(column, [0.25, 0.5, 0.75], err)
+
+
+def test_row_hash_keeps_null_position(spark):
+    """(NULL, 'a') and ('a', NULL) are two distinct rows; a true duplicate
+    pair still counts once."""
+    rows = [(None, "a"), ("a", None)]
+    df = spark.createDataFrame(rows, "x string, y string")
+    assert DataProfiler(exact=True).profile(df).duplicate_rows == 0
+    df = spark.createDataFrame(rows + [("b", "c"), ("b", "c")], "x string, y string")
+    assert DataProfiler(exact=True).profile(df).duplicate_rows == 1
+
+
+@pytest.mark.parametrize("exact", [True, False])
+def test_map_column_profiles(spark, exact):
+    """``xxhash64`` rejects maps at any depth; such columns hash their
+    string form."""
+    df = spark.createDataFrame(
+        [({"a": 1}, ({"k": 1},)), ({"b": 2}, ({"k": 2},)), ({"a": 1}, ({"k": 1},)), (None, None)],
+        "m map<string,int>, sm struct<inner: map<string,int>>",
+    )
+    rep = DataProfiler(exact=exact).profile(df)
+    assert rep.n_rows == 4 and rep.columns["m"].n_missing == 1
+    if exact:
+        assert rep.duplicate_rows == 1
+
+
+def test_approx_array_distinct_within_sketch_error(spark):
+    df = token_table(spark, 3000)
+    exact = DataProfiler(exact=True).profile(df).columns["tokens"].n_distinct
+    approx = DataProfiler().profile(df).columns["tokens"].n_distinct
+    assert abs(approx - exact) <= 3 * 0.05 * exact
+
+
+def _group_stages(spark, group):
+    """(job count, Σ inputRecords) of a job group, from the status tracker
+    and the app status store."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = list(tracker.getJobIdsForGroup(group))
+    stage_ids = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
+    records = 0
+    for sid in stage_ids:
+        attempts = jsc.statusStore().stageData(
+            sid, False, sc._jvm.java.util.ArrayList(), False, no_quantiles
+        )
+        for k in range(attempts.size()):
+            sd = attempts.apply(k)
+            if sd.status().toString() != "SKIPPED":
+                records += sd.inputRecords()
+    return len(jobs), records
+
+
+def test_profile_reads_its_input_twice(spark, tmp_path):
+    """Scan budget: a profile is two aggregate passes over its input."""
+    rows = 1000
+    path = str(tmp_path / "tokens")
+    token_table(spark, rows, dirty=True, num_partitions=2).write.parquet(path)
+    df = spark.read.parquet(path)
+    sc = spark.sparkContext
+    sc.setJobGroup("profile-scan-budget", "DataProfiler.profile")
+    try:
+        DataProfiler().profile(df)
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs, records = _group_stages(spark, "profile-scan-budget")
+    assert records == 2 * rows
+    assert jobs <= 4
