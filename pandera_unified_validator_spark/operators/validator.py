@@ -6,7 +6,8 @@ with a single declarative plan:
 
 1. driver-side preflight: missing columns (C10) + dtype conformance (C9);
 2. ONE whole-stage-codegen pass computing every row-local check as a boolean
-   flag column (C1-C7, U1-U3) — no Python in the hot path;
+   flag column (C1-C7, U1-U3) — no Python in the hot path; the checks are SQL
+   text (``plans/compiler.py``), so a few ``selectExpr`` calls build the plan;
 3. global checks as their scalable Spark shapes:
    * ``unique`` (C8) → map-side-combined ``groupBy(key).count()`` (the
      duplicate-key set is tiny when data is mostly clean) → **broadcast**
@@ -28,19 +29,16 @@ from __future__ import annotations
 
 import logging
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from functools import reduce
-from typing import Any, Mapping, Sequence
+from typing import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.compiler import (
-    CompiledCheck,
-    GlobalCheck,
-    compile_schema,
-    dtype_errors,
-)
+from ..plans.compiler import CompiledCheck, compile_schema, dtype_errors
+from ..plans.compiler import quote_ident as _q
+from ..plans.compiler import sql_literal
 from ..plans.schema import ValidationSchema
 from ..utils.cache import registry as _cache
 from ..utils.reporting import CheckResult, ValidationReport
@@ -55,6 +53,28 @@ _LOG = logging.getLogger(__name__)
 
 
 from ..plans.stats import plan_size_bytes as _plan_size_bytes  # noqa: E402  (shared with dedup)
+
+
+def _fail_count(name: str) -> str:
+    """Aggregate SQL: rows failing check ``name``, as a column ``name``."""
+    return f"sum(CAST(NOT {_q(FLAG_PREFIX + name)} AS BIGINT)) AS {_q(name)}"
+
+
+def _stack(names: Sequence[str]) -> str:
+    """Unpivot the per-check count columns into (check, n_failed) rows."""
+    pairs = ", ".join(f"{sql_literal(n)}, {_q(n)}" for n in names)
+    return f"stack({len(names)}, {pairs}) AS (check, n_failed)"
+
+
+def _dup_keys(df: DataFrame, key_sql: str, alias: str) -> DataFrame:
+    """The values of ``key_sql`` that more than one row of ``df`` holds, as
+    the one column ``alias`` (map-side-combined groupBy, then a filter)."""
+    return (
+        df.groupBy(F.expr(f"{key_sql} AS {alias}"))
+        .agg(F.expr("count(1) AS __dup_n"))
+        .filter("__dup_n > 1")
+        .select(alias)
+    )
 
 
 class ValidationFailedError(Exception):
@@ -87,27 +107,25 @@ class ValidationResult:
 
     def violations(self, include_flags: bool = False) -> DataFrame:
         """Invalid rows + ``failed_checks array<string>`` (P5/P6 analogue)."""
-        failed_names = F.array_compact(
-            F.array(
-                *[
-                    F.when(~F.col(FLAG_PREFIX + c), F.lit(c))
-                    for c in self.checks
-                ]
-            )
+        whens = ", ".join(
+            f"CASE WHEN NOT {_q(FLAG_PREFIX + c)} THEN {sql_literal(c)} END"
+            for c in self.checks
         )
-        out = self.flags.filter(~F.col(_ROW_OK)).withColumn("failed_checks", failed_names)
-        if not include_flags:
-            out = out.drop(*[FLAG_PREFIX + c for c in self.checks], _ROW_OK, _PID)
-        return out
+        out = self.flags.filter(f"NOT {_ROW_OK}").withColumn(
+            "failed_checks", F.expr(f"array_compact(array({whens}))")
+        )
+        return out if include_flags else out.drop(*self._added())
 
     def valid_rows(self) -> DataFrame:
         """The clean split (reference backends/pandas_backend.py:64-75)."""
-        drop = [FLAG_PREFIX + c for c in self.checks] + [_ROW_OK, _PID]
-        return self.flags.filter(F.col(_ROW_OK)).drop(*drop)
+        return self.flags.filter(_ROW_OK).drop(*self._added())
 
     def invalid_rows(self) -> DataFrame:
-        drop = [FLAG_PREFIX + c for c in self.checks] + [_ROW_OK, _PID]
-        return self.flags.filter(~F.col(_ROW_OK)).drop(*drop)
+        return self.flags.filter(f"NOT {_ROW_OK}").drop(*self._added())
+
+    def _added(self) -> list[str]:
+        """Names of the columns ``annotate`` added to the input."""
+        return [FLAG_PREFIX + c for c in self.checks] + [_ROW_OK, _PID]
 
 
 class SparkValidator:
@@ -206,7 +224,7 @@ class SparkValidator:
 
     # ------------------------------------------------------------------ #
     def annotate(
-        self, df: DataFrame, _skip_unique: bool = False
+        self, df: DataFrame, _skip_unique: bool = False, _compiled: tuple | None = None
     ) -> tuple[DataFrame, list[CompiledCheck], list[str]]:
         """Input df → df + one boolean flag column per check (TRUE = pass).
 
@@ -215,8 +233,10 @@ class SparkValidator:
         ``_skip_unique`` omits the unique-join flags entirely — the
         count-only ``check_counts`` path computes unique totals as direct
         aggregates instead (no dup-key materialization, no join-back).
+        ``_compiled``: the caller's ``compile_schema(schema, df.columns)``.
         """
-        row_checks, global_checks, missing = compile_schema(self.schema, df.columns)
+        columns = df.columns
+        row_checks, global_checks, missing = _compiled or compile_schema(self.schema, columns)
         if _skip_unique:
             global_checks = [g for g in global_checks if g.check != "unique"]
         self.unique_join_plan = {}
@@ -224,16 +244,19 @@ class SparkValidator:
         for cached in self._persisted:
             _cache.release(cached)
         self._persisted = []
-        annotated = df.withColumn(_PID, F.spark_partition_id())
-
-        flag_cols: list[Column] = []
-        names: list[CompiledCheck] = []
-        for chk in row_checks:
-            # NULL check result (possible from custom SQL/UDF) counts as FAIL,
-            # matching pandera's treatment of non-boolean check output.
-            flag_cols.append(F.coalesce(chk.expr, F.lit(False)).alias(FLAG_PREFIX + chk.name))
-            names.append(chk)
-        annotated = annotated.select("*", *flag_cols)
+        # NULL check result (possible from custom SQL/UDF) counts as FAIL,
+        # matching pandera's treatment of non-boolean check output.
+        sql_flags, udf_flags = [], []
+        for c in row_checks:
+            if isinstance(c.expr, str):
+                sql_flags.append(f"coalesce({c.expr}, false) AS {_q(FLAG_PREFIX + c.name)}")
+            else:
+                udf_flags.append(F.coalesce(c.expr, F.lit(False)).alias(FLAG_PREFIX + c.name))
+        annotated = df.selectExpr("*", f"spark_partition_id() AS {_PID}", *sql_flags)
+        if udf_flags:  # pandas-UDF checks; the last projection restores check order
+            annotated = annotated.select("*", *udf_flags)
+        # joined flags: (check, SQL for its flag over the temporary join key)
+        joined: list[tuple[CompiledCheck, str]] = []
 
         # unique (C8): dup-key set via partial-agg groupBy → broadcast join.
         for g in global_checks:
@@ -254,8 +277,8 @@ class SparkValidator:
                 _LOG.warning(msg)
                 self.warnings.append(msg)
                 continue
-            col = g.column
-            nn = df.filter(F.col(col).isNotNull())
+            q, key = _q(g.column), f"__dup_key_{len(joined)}"
+            nn = df.filter(f"{q} IS NOT NULL")
             strategy = self.unique_strategy
             use_broadcast = True
             dup_keys: DataFrame | None = None
@@ -266,63 +289,37 @@ class SparkValidator:
                 # Also bounded by broadcast_dup_limit (≥8 B per key) so a
                 # caller-tightened limit still forces the exact tier.
                 size = _plan_size_bytes(df)
-                if size is not None and size <= min(
+                if size is None or size > min(
                     self.stats_broadcast_bytes, self.broadcast_dup_limit * 8
                 ):
-                    strategy = "direct"
-                else:
                     # tier 2: eager dup-key job — the column-pruned scan +
                     # map-side-combined groupBy the join-back needs anyway,
                     # cached, so the EXACT dup-key count picks the join
-                    # shape with no extra input scan (round 3's separate
-                    # approx_count_distinct estimate job was a third scan:
-                    # +64% check_unique wall)
+                    # shape with no extra input scan
                     dup_keys = _cache.persist(
-                        nn.groupBy(col)
-                        .agg(F.count(F.lit(1)).alias("__dup_n"))
-                        .filter(F.col("__dup_n") > 1)
-                        .select(F.col(col).alias("__dup_key")),
-                        f"SparkValidator.dup_keys.{g.name}",
+                        _dup_keys(nn, q, key), f"SparkValidator.dup_keys.{g.name}"
                     )
                     self._persisted.append(dup_keys)
                     use_broadcast = dup_keys.count() <= self.broadcast_dup_limit
-                    strategy = "direct"
+                strategy = "direct"
             self.unique_join_plan[g.name] = "broadcast" if use_broadcast else "shuffle"
             if strategy == "hash_prefilter":
                 # stage 1: duplicate HASHES — the shuffle carries 8 bytes/row
-                dup_hashes = (
-                    nn.groupBy(F.xxhash64(col).alias("__kh"))
-                    .agg(F.count(F.lit(1)).alias("__dup_n"))
-                    .filter(F.col("__dup_n") > 1)
-                    .select("__kh")
-                )
+                dup_hashes = _dup_keys(nn, f"xxhash64({q})", "__kh")
                 # stage 2: exact verify only candidate rows (collisions drop)
                 cand = nn.join(
-                    F.broadcast(dup_hashes),
-                    F.xxhash64(nn[col]) == F.col("__kh"),
-                    "left_semi",
+                    F.broadcast(dup_hashes), F.expr(f"xxhash64({q}) = __kh"), "left_semi"
                 )
-                dup_keys = (
-                    cand.groupBy(col)
-                    .agg(F.count(F.lit(1)).alias("__dup_n"))
-                    .filter(F.col("__dup_n") > 1)
-                    .select(F.col(col).alias("__dup_key"))
-                )
+                dup_keys = _dup_keys(cand, q, key)
             elif dup_keys is None:
-                dup_keys = (
-                    nn.groupBy(col)
-                    .agg(F.count(F.lit(1)).alias("__dup_n"))
-                    .filter(F.col("__dup_n") > 1)
-                    .select(F.col(col).alias("__dup_key"))
-                )
+                dup_keys = _dup_keys(nn, q, key)
             annotated = annotated.join(
                 F.broadcast(dup_keys) if use_broadcast else dup_keys,
-                on=annotated[col] == F.col("__dup_key"),
+                on=F.expr(f"{q} = {key}"),
                 how="left",
-            ).withColumn(
-                FLAG_PREFIX + g.name, F.col("__dup_key").isNull()
-            ).drop("__dup_key")
-            names.append(CompiledCheck(g.name, col, F.col(FLAG_PREFIX + g.name), "unique"))
+            )
+            flag = _q(FLAG_PREFIX + g.name)
+            joined.append((CompiledCheck(g.name, g.column, flag, "unique"), f"{key} IS NULL"))
 
         # referential (C6 vs dimension): broadcast left join on distinct keys.
         for col, dim in self.ref_checks.items():
@@ -330,66 +327,52 @@ class SparkValidator:
                 dim_df, dim_col = dim
             else:
                 dim_df, dim_col = dim, dim.columns[0]
-            name = f"{col}__referential"
-            keys = dim_df.select(F.col(dim_col).alias("__ref_key")).distinct()
+            q, key = _q(col), f"__ref_key_{len(joined)}"
+            keys = dim_df.selectExpr(f"{_q(dim_col)} AS {key}").distinct()
             annotated = annotated.join(
-                F.broadcast(keys),
-                on=annotated[col] == F.col("__ref_key"),
-                how="left",
-            ).withColumn(
-                # NULL fk passes (nullability is its own check)
-                FLAG_PREFIX + name,
-                F.col(col).isNull() | F.col("__ref_key").isNotNull(),
-            ).drop("__ref_key")
-            names.append(CompiledCheck(name, col, F.col(FLAG_PREFIX + name), "referential"))
+                F.broadcast(keys), on=F.expr(f"{q} = {key}"), how="left"
+            )
+            name = f"{col}__referential"
+            chk = CompiledCheck(name, col, _q(FLAG_PREFIX + name), "referential")
+            # NULL fk passes (nullability is its own check)
+            joined.append((chk, f"{q} IS NULL OR {key} IS NOT NULL"))
 
-        all_flags = [FLAG_PREFIX + c.name for c in names]
-        row_ok = (
-            reduce(lambda a, b: a & b, [F.col(f) for f in all_flags])
-            if all_flags
-            else F.lit(True)
+        # one projection: the joined flags and the row verdict; the
+        # temporary join keys drop out
+        flags = [_q(FLAG_PREFIX + c.name) for c in row_checks]
+        annotated = annotated.selectExpr(
+            *[_q(c) for c in columns + [_PID]],
+            *flags,
+            *[f"({sql}) AS {c.expr}" for c, sql in joined],
+            f"{' AND '.join(flags + [f'({sql})' for _, sql in joined]) or 'true'} AS {_ROW_OK}",
         )
-        annotated = annotated.withColumn(_ROW_OK, row_ok)
-        return annotated, names, missing
+        return annotated, row_checks + [c for c, _ in joined], missing
 
     # ------------------------------------------------------------------ #
     def validate(self, df: DataFrame) -> ValidationResult:
         t0 = time.time()
-        schema_errors = [
-            f"column {m!r} missing from input" for m in
-            compile_schema(self.schema, df.columns)[2]
-        ]
+        compiled = compile_schema(self.schema, df.columns)
+        schema_errors = [f"column {m!r} missing from input" for m in compiled[2]]
         schema_errors += dtype_errors(self.schema, df)
         if self.schema.strict:
             extra = set(df.columns) - set(self.schema.columns)
             schema_errors += [f"unexpected column {c!r} (strict mode)" for c in sorted(extra)]
 
-        annotated, checks, _missing = self.annotate(df)
+        annotated, checks, _missing = self.annotate(df, _compiled=compiled)
         flag_names = [c.name for c in checks]
 
-        pid = F.col(self.partition_by) if self.partition_by else F.col(_PID)
+        pid = _q(self.partition_by) if self.partition_by else _PID
         # ONE aggregation job: per-partition totals + per-check fail counts.
-        aggs = [
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum((~F.col(_ROW_OK)).cast("long")).alias("n_invalid_rows"),
-        ] + [
-            F.sum((~F.col(FLAG_PREFIX + n)).cast("long")).alias(n) for n in flag_names
-        ]
-        wide = annotated.groupBy(pid.alias("partition_id")).agg(*aggs)
+        wide = annotated.groupBy(F.expr(f"{pid} AS partition_id")).agg(
+            F.expr("count(1) AS n_rows"),
+            F.expr(f"sum(CAST(NOT {_ROW_OK} AS BIGINT)) AS n_invalid_rows"),
+            *[F.expr(_fail_count(n)) for n in flag_names],
+        )
         # long-format verdict DataFrame for downstream use / persistence
-        if flag_names:
-            stack_expr = ", ".join(f"'{n}', `{n}`" for n in flag_names)
-            verdicts = wide.selectExpr(
-                "partition_id",
-                "n_rows",
-                "n_invalid_rows",
-                f"stack({len(flag_names)}, {stack_expr}) as (check, n_failed)",
-            )
-        else:
-            verdicts = wide.selectExpr(
-                "partition_id", "n_rows", "n_invalid_rows",
-                "CAST(NULL AS STRING) as check", "CAST(0 AS LONG) as n_failed",
-            )
+        long = [_stack(flag_names)] if flag_names else [
+            "CAST(NULL AS STRING) as check", "CAST(0 AS LONG) as n_failed"
+        ]
+        verdicts = wide.selectExpr("partition_id", "n_rows", "n_invalid_rows", *long)
 
         rows = wide.collect()
         n_rows = sum(r["n_rows"] for r in rows)
@@ -409,15 +392,12 @@ class SparkValidator:
             # check — up to 20 separate job launches per failing validation.
             failed = [c for c in checks if by_check.get(c.name)][:20]
             if failed:
-                unified = list(
-                    dict.fromkeys(
-                        list(self.key_columns)
-                        + [c.column for c in failed if c.column]
-                    )
-                )
+                unified = list(dict.fromkeys(
+                    [*self.key_columns, *(c.column for c in failed if c.column)]
+                ))
                 branches = [
-                    annotated.filter(~F.col(FLAG_PREFIX + c.name))
-                    .select(F.lit(c.name).alias("__chk"), *unified)
+                    annotated.filter(f"NOT {_q(FLAG_PREFIX + c.name)}")
+                    .selectExpr(f"{sql_literal(c.name)} AS __chk", *map(_q, unified))
                     .limit(self.max_samples)
                     for c in failed
                 ]
@@ -426,16 +406,11 @@ class SparkValidator:
                     d = r.asDict()
                     grouped.setdefault(d.pop("__chk"), []).append(d)
                 for c in failed:
-                    cols = dict.fromkeys(
-                        list(self.key_columns) + ([c.column] if c.column else [])
-                    )
+                    cols = [*self.key_columns, *([c.column] if c.column else [])]
                     # NOTE: must not rebind `rows` — it still holds the
                     # per-partition verdict rows used for n_partitions below
-                    sample_rows = grouped.get(c.name, ())
-                    if sample_rows:
-                        samples[c.name] = tuple(
-                            {k: sr[k] for k in cols} for sr in sample_rows
-                        )
+                    if grouped.get(c.name):
+                        samples[c.name] = tuple({k: sr[k] for k in cols} for sr in grouped[c.name])
 
         results = tuple(
             CheckResult(
@@ -490,16 +465,11 @@ class SparkValidator:
         unique column (column-pruned) instead of twice. Streaming inputs
         keep the annotate path (which skips unique LOUDLY)."""
         skip_unique = not df.isStreaming
-        annotated, checks, _ = self.annotate(df, _skip_unique=skip_unique)
+        compiled = compile_schema(self.schema, df.columns)
+        annotated, checks, _ = self.annotate(df, _skip_unique=skip_unique, _compiled=compiled)
         flag_names = [c.name for c in checks]
-        uniq = []
-        if skip_unique:
-            _, global_checks, _m = compile_schema(self.schema, df.columns)
-            uniq = [
-                g
-                for g in global_checks
-                if g.check == "unique" and g.column in df.columns
-            ]
+        # compile_schema already skips checks on missing columns
+        uniq = [g for g in compiled[1] if g.check == "unique"] if skip_unique else []
         if not flag_names and not uniq:
             # checkless schema: empty result with the stable contract schema
             # (a bare stack(0,) would be malformed SQL)
@@ -508,41 +478,27 @@ class SparkValidator:
             )
         parts: list[DataFrame] = []
         if flag_names:
-            aggs = [F.count(F.lit(1)).alias("__n")] + [
-                F.sum((~F.col(FLAG_PREFIX + n)).cast("long")).alias(n)
-                for n in flag_names
-            ]
-            wide = annotated.agg(*aggs)
-            stack_expr = ", ".join(f"'{n}', `{n}`" for n in flag_names)
-            parts.append(
-                wide.selectExpr(
-                    f"stack({len(flag_names)}, {stack_expr}) as (check, n_failed)",
-                    "__n as n_checked",
-                ).select("check", "n_failed", "n_checked")
+            wide = annotated.agg(
+                F.expr("count(1) AS __n"), *[F.expr(_fail_count(n)) for n in flag_names]
             )
+            parts.append(wide.selectExpr(_stack(flag_names), "__n as n_checked"))
         if uniq:
-            total = df.agg(F.count(F.lit(1)).alias("n_checked"))
+            total = df.agg(F.expr("count(1) AS n_checked"))
             for g in uniq:
+                q = _q(g.column)
                 dup_sum = (
-                    df.filter(F.col(g.column).isNotNull())
-                    .groupBy(g.column)
-                    .agg(F.count(F.lit(1)).alias("__c"))
-                    .filter(F.col("__c") > 1)
-                    .agg(
-                        F.coalesce(F.sum("__c"), F.lit(0))
-                        .cast("long")
-                        .alias("n_failed")
-                    )
+                    df.filter(f"{q} IS NOT NULL")
+                    .groupBy(F.expr(q))
+                    .agg(F.expr("count(1) AS __c"))
+                    .filter("__c > 1")
+                    .agg(F.expr("CAST(coalesce(sum(__c), 0) AS BIGINT) AS n_failed"))
                 )
                 parts.append(
-                    dup_sum.crossJoin(total).select(
-                        F.lit(g.name).alias("check"), "n_failed", "n_checked"
+                    dup_sum.crossJoin(total).selectExpr(
+                        f"{sql_literal(g.name)} AS check", "n_failed", "n_checked"
                     )
                 )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionAll(p)
-        return out
+        return reduce(DataFrame.unionAll, parts)
 
     # convenience: the reference's filter_invalid_rows split (P5)
     def validate_and_split(self, df: DataFrame) -> tuple[DataFrame, DataFrame, ValidationReport]:

@@ -1,8 +1,12 @@
-"""Compile a ValidationSchema into named PySpark boolean check expressions.
+"""Compile a ValidationSchema into named boolean check expressions.
 
 This replaces the reference's pandera emission layer (``to_pandera_column``,
 reference ``core/schema.py:68-92``) with direct Catalyst expressions: every
-check becomes one ``pyspark.sql.Column`` that is TRUE when the row PASSES.
+check becomes SQL boolean text that is TRUE when the row PASSES, so the
+validator builds its plan in a few ``selectExpr`` calls, not one py4j call per
+``Column`` node. Only pandas-UDF ``fn`` checks stay ``pyspark.sql.Column``s.
+Names go through ``quote_ident`` and values through ``sql_literal``, so dotted
+or quoted column names and any string value are taken literally.
 
 Semantics (pandera-compatible, SURVEY.md §2.2):
 
@@ -11,7 +15,7 @@ Semantics (pandera-compatible, SURVEY.md §2.2):
 * ``pattern`` anchors at the start (pandera ``str_matches``); with
   ``pattern_search=True`` it matches anywhere (Pydantic semantics).
 * Conditional checks compile to ``NOT condition OR check``
-  (``F.when(cond, check).otherwise(True)``).
+  (``coalesce(CASE WHEN cond THEN check ELSE true END, true)``).
 
 Row-local checks all evaluate in ONE whole-stage-codegen pass (no shuffle,
 no Python). Non-row-local checks — ``unique`` (needs a hash shuffle on the
@@ -21,7 +25,10 @@ described here and executed by the validator (``operators/validator.py``).
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
+from datetime import date, datetime
+from decimal import Decimal
 from typing import Any, Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -37,7 +44,9 @@ __all__ = [
     "spark_type",
     "compile_column_checks",
     "compile_schema",
+    "quote_ident",
     "schema_struct",
+    "sql_literal",
 ]
 
 # logical dtype → Spark type (reference DTYPE_MAP core/schema.py:33-48 analogue)
@@ -92,11 +101,12 @@ def dtype_conforms(dtype_label: str, actual: T.DataType) -> bool:
 
 @dataclass(frozen=True)
 class CompiledCheck:
-    """One named row-local check. ``expr`` is TRUE when the row passes."""
+    """One named row-local check, TRUE when the row passes. ``expr`` is SQL
+    boolean text, or a ``Column`` for checks that call a pandas UDF."""
 
     name: str        # e.g. "n_tok__ge"
     column: str      # "" for table-level (cross/conditional) checks
-    expr: Column
+    expr: str | Column
     check: str       # check kind: "ge", "pattern", "custom:<name>", ...
 
 
@@ -110,31 +120,66 @@ class GlobalCheck:
     ref_values: tuple | None = None  # for referential executed as broadcast join
 
 
-def _null_safe(col: Column, pred: Column) -> Column:
-    """Pandera semantics: NULL passes every value check."""
-    return col.isNull() | pred
+def quote_ident(name: str) -> str:
+    """SQL identifier naming exactly ``name`` (dots, spaces, backticks)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_literal(v: Any, check: str = "") -> str:
+    """SQL literal with the Spark type and value ``F.lit(v)`` gives.
+
+    numpy scalars are unwrapped with ``.item()`` (``int64`` stays BIGINT,
+    as ``F.lit`` types it); any type not handled here raises ``TypeError``
+    naming ``check`` rather than falling through to a string literal."""
+    if type(v).__module__ == "numpy" and hasattr(v, "dtype"):
+        if v.dtype.name not in ("bool", "int64", "float64"):
+            raise TypeError(f"check {check!r}: unsupported numpy type {v.dtype}")
+        return f"{v.item()}L" if v.dtype.name == "int64" else sql_literal(v.item(), check)
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v) if -(2**31) <= v < 2**31 else f"{v}L"
+    if isinstance(v, float):
+        # Spark casts the strings 'nan', 'inf' and '-inf' to the IEEE values
+        return f"{v!r}D" if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, Decimal) and v.is_finite():
+        return f"{v}BD"
+    if isinstance(v, datetime):  # F.lit reads a naive datetime as local time
+        return f"TIMESTAMP '{v.astimezone().isoformat()}'"
+    if isinstance(v, date):
+        return f"DATE '{v.isoformat()}'"
+    raise TypeError(f"check {check!r}: cannot render {type(v).__name__} {v!r} as SQL")
+
+
+def _user_sql(sql: str) -> str:
+    """Parenthesize caller SQL; the newline ends any trailing ``--`` comment."""
+    return f"({sql}\n)"
 
 
 def compile_column_checks(spec: ColumnSpec) -> tuple[list[CompiledCheck], list[GlobalCheck]]:
-    c = F.col(spec.name)
+    q = quote_ident(spec.name)
     row: list[CompiledCheck] = []
     glob: list[GlobalCheck] = []
 
-    def add(kind: str, pred: Column, null_safe: bool = True) -> None:
-        expr = _null_safe(c, pred) if null_safe else pred
+    def add(kind: str, pred: str | Column) -> None:
+        # pandera semantics: NULL passes every value check
+        expr = f"({q} IS NULL OR ({pred}))" if isinstance(pred, str) else F.col(q).isNull() | pred
         row.append(CompiledCheck(f"{spec.name}__{kind}", spec.name, expr, kind))
 
-    if not spec.nullable:
-        # C7 (reference core/schema.py:86-92)
-        row.append(CompiledCheck(f"{spec.name}__not_null", spec.name, c.isNotNull(), "not_null"))
-    if spec.ge is not None:   # C1 core/schema.py:72-73
-        add("ge", c >= F.lit(spec.ge))
-    if spec.le is not None:   # C2 core/schema.py:74-75
-        add("le", c <= F.lit(spec.le))
-    if spec.gt is not None:   # C3 core/schema.py:76-77
-        add("gt", c > F.lit(spec.gt))
-    if spec.lt is not None:   # C4 core/schema.py:78-79
-        add("lt", c < F.lit(spec.lt))
+    def lit(v: Any, kind: str) -> str:
+        return sql_literal(v, f"{spec.name}__{kind}")
+
+    if not spec.nullable:  # C7 (reference core/schema.py:86-92)
+        row.append(CompiledCheck(f"{spec.name}__not_null", spec.name, f"{q} IS NOT NULL",
+                                 "not_null"))
+    for kind, op in (("ge", ">="), ("le", "<="), ("gt", ">"), ("lt", "<")):
+        # C1-C4 core/schema.py:72-79
+        if getattr(spec, kind) is not None:
+            add(kind, f"{q} {op} {lit(getattr(spec, kind), kind)}")
     if spec.pattern is not None:  # C5 core/schema.py:80-81 (anchoring per module docstring)
         # Anchor with a non-capturing group: a bare "^" + "cat|dog" would
         # compile to ^cat|dog (alternation binds looser than the anchor) and
@@ -142,9 +187,10 @@ def compile_column_checks(spec: ColumnSpec) -> tuple[list[CompiledCheck], list[G
         pat = spec.pattern if spec.pattern_search else (
             spec.pattern if spec.pattern.startswith("^") else "^(?:" + spec.pattern + ")"
         )
-        add("pattern", c.rlike(pat))
+        add("pattern", f"{q} RLIKE {lit(pat, 'pattern')}")
     if spec.isin is not None:  # C6 core/schema.py:82-83 (small literal set → codegen'd IN)
-        add("isin", c.isin(list(spec.isin)))
+        values = ", ".join(lit(v, "isin") for v in spec.isin)
+        add("isin", f"{q} IN ({values})" if values else "false")
     if spec.element_ge is not None or spec.element_lt is not None:
         # token-element range for array<int> (input_hint). Implemented as
         # array_min/array_max bound checks rather than forall(...): min/max
@@ -155,18 +201,14 @@ def compile_column_checks(spec: ColumnSpec) -> tuple[list[CompiledCheck], list[G
         # (array_min/max skip nulls), matching "check the values present".
         preds = []
         if spec.element_ge is not None:
-            preds.append(F.array_min(c) >= F.lit(spec.element_ge))
+            preds.append(f"array_min({q}) >= {lit(spec.element_ge, 'element_range')}")
         if spec.element_lt is not None:
-            preds.append(F.array_max(c) < F.lit(spec.element_lt))
-        pred = preds[0]
-        for p in preds[1:]:
-            pred = pred & p
+            preds.append(f"array_max({q}) < {lit(spec.element_lt, 'element_range')}")
         # empty array: min/max yield NULL → treat as pass (no values to check)
-        add("element_range", (F.size(c) == 0) | pred)
+        add("element_range", f"size({q}) = 0 OR ({' AND '.join(preds)})")
     for custom in spec.custom_checks:  # U1 core/schema.py:142-157
         if custom.sql is not None:
-            pred = F.expr(custom.sql.replace("{c}", f"`{spec.name}`"))
-            add(f"custom:{custom.name}", pred)
+            add(f"custom:{custom.name}", _user_sql(custom.sql.replace("{c}", q)))
         else:
             # Arrow-vectorized pandas UDF over the column (never per-row
             # Python). Pandera semantics: the user's fn sees only non-null
@@ -184,7 +226,7 @@ def compile_column_checks(spec: ColumnSpec) -> tuple[list[CompiledCheck], list[G
                 return out
 
             udf = F.pandas_udf(_null_safe_wrap, T.BooleanType())
-            add(f"custom:{custom.name}", udf(c))
+            add(f"custom:{custom.name}", udf(F.col(q)))
     if spec.unique:  # C8 — needs hash shuffle; handled by the validator
         glob.append(GlobalCheck(f"{spec.name}__unique", spec.name, "unique"))
     return row, glob
@@ -214,7 +256,7 @@ def compile_schema(
             missing.extend(sorted(set(cc.columns) - present))
             continue
         if cc.sql is not None:
-            expr = F.expr(cc.sql)
+            expr: str | Column = _user_sql(cc.sql)
         else:
             # struct-of-columns → Arrow pandas UDF returning a bool mask
             import pandas as pd  # noqa: F401
@@ -230,12 +272,14 @@ def compile_schema(
                 return _fn(pdf)
 
             udf = F.pandas_udf(_wrap, T.BooleanType())
-            expr = udf(*[F.col(x) for x in cols])
+            expr = udf(*[F.col(quote_ident(x)) for x in cols])
         row.append(CompiledCheck(f"table__{cc.name}", "", expr, f"cross:{cc.name}"))
     for cond in schema.conditional_checks:  # U3 — implemented (reference dead code)
-        expr = F.when(F.expr(cond.condition_sql), F.expr(cond.check_sql)).otherwise(F.lit(True))
         # NULL condition → not applicable → pass
-        expr = F.coalesce(expr, F.lit(True))
+        expr = (
+            f"coalesce(CASE WHEN {_user_sql(cond.condition_sql)} "
+            f"THEN {_user_sql(cond.check_sql)} ELSE true END, true)"
+        )
         row.append(
             CompiledCheck(f"table__{cond.name}", "", expr, f"conditional:{cond.name}")
         )

@@ -244,13 +244,10 @@ class PartitionedValidationRunner:
             files[i : i + self.files_per_group]
             for i in range(0, len(files), self.files_per_group)
         ]
-        units = [
-            (
-                tuple(g),
-                lambda g=g: spark.read.format(fmt).options(**reader_options).load(g),
-            )
-            for g in groups
-        ]
+        # every group reads under the whole table's schema: no per-group
+        # inference job, and no group typed apart from the others
+        reader = spark.read.format(fmt).options(**reader_options).schema(base.schema)
+        units = [(tuple(g), lambda g=g: reader.load(g)) for g in groups]
         return self._run_units(units)
 
     def run_iceberg(

@@ -74,6 +74,24 @@ def test_group_loop_clean(spark, tmp_path):
     assert res.metrics.total_rows == 40
 
 
+def test_group_reads_use_the_table_schema(spark, tmp_path):
+    """Every group reads under the schema a whole-table read infers: a JSON
+    group holding only integer values still types ``value`` as double, so a
+    ``float`` column reports no dtype error in any group."""
+    p = tmp_path / "json"
+    p.mkdir()
+    (p / "g1.json").write_text(
+        '{"id": 1, "name": "a", "value": 1}\n{"id": 2, "name": "b", "value": 2}\n'
+    )
+    (p / "g2.json").write_text('{"id": 3, "name": "c", "value": 2.5}\n')
+    runner = PartitionedValidationRunner(
+        SparkValidator(stream_schema()), files_per_group=1, error_threshold=None
+    )
+    res = runner.run(spark, str(p), fmt="json")
+    assert len(res.groups) == 2 and res.metrics.total_rows == 3
+    assert not [e for e in res.report.errors if "value" in e]
+
+
 def test_progress_callback(spark, tmp_path):
     p = str(tmp_path / "cb")
     spark.createDataFrame(

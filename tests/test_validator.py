@@ -311,13 +311,26 @@ def test_console_sections_logging_and_reference_export(spark, dirty):
     }
     assert rd["summary"]["total_errors"] == len(rd["errors"]) > 0
 
+    import logging
+
     from pandera_unified_validator_spark import configure_logging, get_logger
 
-    lg = configure_logging(level="DEBUG")
-    assert lg.level == 10 and len(lg.handlers) == 1
-    configure_logging(level="INFO")  # idempotent: handlers replaced
-    assert len(lg.handlers) == 1
-    assert get_logger("x").name.endswith(".x")
+    # configure_logging sets propagate=False on the package logger; restore
+    # it so later caplog-based tests still see the package's warnings
+    pkg = logging.getLogger("pandera_unified_validator_spark")
+    saved = (list(pkg.handlers), pkg.level, pkg.propagate)
+    try:
+        lg = configure_logging(level="DEBUG")
+        assert lg.level == 10 and len(lg.handlers) == 1
+        configure_logging(level="INFO")  # idempotent: handlers replaced
+        assert len(lg.handlers) == 1
+        assert get_logger("x").name.endswith(".x")
+    finally:
+        for h in pkg.handlers:
+            h.close()
+        pkg.handlers[:] = saved[0]
+        pkg.setLevel(saved[1])
+        pkg.propagate = saved[2]
 
 
 def test_unique_auto_stats_fast_path(spark, tmp_path):
@@ -418,3 +431,71 @@ def test_check_counts_count_only_unique_matches_validate(spark):
     # v all-unique -> 0
     assert counts["k__unique"] == (2, 6)
     assert counts["v__unique"] == (0, 6)
+
+
+def test_dotted_and_quoted_column_names(spark):
+    """Column names holding a dot, a space or a backtick are taken literally
+    by every check kind, by the unique and referential joins and by the
+    violation rows; string values with quotes and backslashes stay intact.
+    Fail counts and per-row failed checks equal a Python oracle."""
+    import re
+
+    from pandera_unified_validator_spark.plans.schema import CustomCheck
+
+    rows = [
+        (1, "x'y", 1.0), (1, "a\\b", 2.0), (-3, "zz", None), (None, "q", 3.0),
+        (5, None, 4.0), (6, "x'y", 9.0), (7, "b'c", 0.5), (8, "-", 6.0),
+    ]
+    df = spark.createDataFrame(rows, "`a.b` int, `s t` string, `we``ird` double")
+    allowed, dim_values, pattern = ["x'y", "a\\b", "q", "-"], ["x'y", "q", "zz"], r"[\w']+$"
+    schema = (
+        SchemaBuilder("quoted")
+        .column("a.b", "int", nullable=False, unique=True, ge=0,
+                custom_checks=(CustomCheck("small", sql="{c} < 8"),))
+        .column("s t", "str", pattern=pattern, isin=allowed)
+        .column("we`ird", "float", le=5.0,
+                custom_checks=(CustomCheck("udf", fn=lambda s: s != 0.5),))
+        .build()
+    )
+    dim = spark.createDataFrame([(v,) for v in dim_values], "`k.k` string")
+    v = SparkValidator(schema, ref_checks={"s t": dim}, key_columns=("a.b",))
+    res = v.validate(df)
+
+    keys = [r[0] for r in rows]
+
+    def failed(a, s, w):
+        out = []
+        if a is None:
+            out.append("a.b__not_null")
+        if a is not None and a < 0:
+            out.append("a.b__ge")
+        if a is not None and a >= 8:
+            out.append("a.b__custom:small")
+        if s is not None and not re.match(pattern, s):
+            out.append("s t__pattern")
+        if s is not None and s not in allowed:
+            out.append("s t__isin")
+        if w is not None and w > 5.0:
+            out.append("we`ird__le")
+        if w is not None and w == 0.5:
+            out.append("we`ird__custom:udf")
+        if a is not None and keys.count(a) > 1:
+            out.append("a.b__unique")
+        if s is not None and s not in dim_values:
+            out.append("s t__referential")
+        return out
+
+    oracle = [(r[0], sorted(failed(*r))) for r in rows]
+    want = {c.name: 0 for c in res.report.checks}
+    for _, names in oracle:
+        for n in names:
+            want[n] += 1
+    assert len(want) == 9
+    assert {c.name: c.n_failed for c in res.report.checks} == want
+    counts = {r["check"]: r["n_failed"] for r in v.check_counts(df).collect()}
+    assert counts == want
+
+    viol = res.violations()
+    assert viol.columns == ["a.b", "s t", "we`ird", "failed_checks"]
+    got = sorted(((r["a.b"], sorted(r["failed_checks"])) for r in viol.collect()), key=repr)
+    assert got == sorted(((k, f) for k, f in oracle if f), key=repr)
